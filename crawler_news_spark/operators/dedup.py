@@ -296,7 +296,6 @@ def minhash_cross_near_dups(new_docs: DataFrame, old_docs: DataFrame,
     candidates are only ever new x old."""
     from . import _cache
 
-    spark = new_docs.sparkSession
     sigs_new = _cache.claim(
         "minhash_cross.sigs_new", minhash_signatures(new_docs, text_col, id_col)
     )
@@ -306,35 +305,13 @@ def minhash_cross_near_dups(new_docs: DataFrame, old_docs: DataFrame,
     all_docs = new_docs.select(id_col, text_col).unionByName(
         old_docs.select(id_col, text_col)
     )
-    import os
-
-    # same strategy pick as the self-join pipeline (see minhash_near_dups):
-    # selective candidate streams join the key arrays onto the pairs, dense
-    # ones amortize the per-worker side-file load; decided from the cached
-    # sigs BEFORE the key table is produced
-    ratio = float(os.environ.get("SPARK_GRAFT_MH_JOIN_VERIFY_RATIO", "8"))
-    bound = _raw_pair_bound(sigs_new, sigs_b=sigs_old, id_col=id_col)
-    n_docs = sigs_new.count() + sigs_old.count()  # both cached by the probe
-    id_type = new_docs.schema[id_col].dataType.simpleString()
-    if bound <= ratio * max(n_docs, 1):
-        keys_back = _cache.claim(
-            "minhash_cross.keys_df", shingle_keys(all_docs, text_col, id_col)
-        )
-        verify = lambda pairs: _verify_pairs_join(  # noqa: E731
-            pairs, keys_back, id_col, id_type, threshold_u
-        )
-    else:
-        keys_dir = _claim_keys_dir("minhash_cross.keys")
-        shingle_keys(all_docs, text_col, id_col).write.parquet(keys_dir, mode="overwrite")
-        keys_back = spark.read.parquet(keys_dir)
-        verify = lambda pairs: _verify_pairs_on_keys(  # noqa: E731
-            pairs, keys_dir, id_type, threshold_u, spread=False
-        )
-    sizes = keys_back.select(id_col, F.size("keys").cast("long").alias("_nsh"))
+    sizes, verify, n_docs = _verify_plan(
+        sigs_new, sigs_old, all_docs, text_col, id_col, threshold_u, "minhash_cross"
+    )
     pairs = _fused_candidate_pairs(
         sigs_new, sizes, id_col, min_sig_matches, threshold_u,
         sigs_b=sigs_old, sizes_b=sizes, dedup=False,
-        broadcast_bands=n_docs <= _broadcast_max_docs(),
+        broadcast_bands=n_docs <= MH_BROADCAST_MAX_DOCS,
     )
     jac = verify(pairs)
     return jac.filter(F.col("jaccard_u") >= threshold_u).distinct()
@@ -829,15 +806,16 @@ def _size_bound_ok(threshold_u: int):
     return F.floor(mn * F.lit(1e6) / mx + F.lit(0.5)) >= F.lit(threshold_u)
 
 
-def _broadcast_max_docs() -> int:
-    """Corpus-size cap for broadcasting the enriched band table (~1.3 KB
-    per doc at 4 bands x 8 sigs): the default 500k docs keeps the build
-    relation ~650 MB, far under the 8 GB broadcast cap, and is
-    deployment-tunable via SPARK_GRAFT_MH_BROADCAST_MAX_DOCS — beyond it
-    the band join falls back to a (scale-safe) shuffle join."""
-    import os
+# Corpus-size cap for broadcasting the enriched band table (~1.3 KB per doc
+# at 4 bands x 8 sigs): 500k docs keeps the build relation ~650 MB, far under
+# the 8 GB broadcast cap — beyond it the band join falls back to a
+# (scale-safe) shuffle join.
+MH_BROADCAST_MAX_DOCS = 500_000
 
-    return int(os.environ.get("SPARK_GRAFT_MH_BROADCAST_MAX_DOCS", "500000"))
+# Verify-strategy breakeven: join-verify ships ~2*bound key arrays once, the
+# side file loads n_docs arrays in each of W workers, so join wins while
+# bound <~ (W/2)*n_docs; 8 is half that at W=32.
+MH_JOIN_VERIFY_RATIO = 8
 
 
 def _fused_candidate_pairs(sigs: DataFrame, sizes: DataFrame, id_col: str,
@@ -902,7 +880,7 @@ def _fused_candidate_pairs(sigs: DataFrame, sizes: DataFrame, id_col: str,
     # side so neither side shuffles (post-explode size estimates otherwise
     # push the planner to a sort-merge join: 2 Exchanges + Sorts at r09
     # start).  broadcast_bands=False (corpus above the broadcast cap —
-    # see _broadcast_max_docs) keeps the scale-safe shuffle join.
+    # see MH_BROADCAST_MAX_DOCS) keeps the scale-safe shuffle join.
     joined = ba.join(F.broadcast(bb) if broadcast_bands else bb,
                      ["band", *vcols])
     if not cross:
@@ -917,6 +895,40 @@ def _fused_candidate_pairs(sigs: DataFrame, sizes: DataFrame, id_col: str,
     # stream in the SAME stage and distinct the (tiny) thresholded output
     # instead — identical result set
     return out.distinct() if dedup else out
+
+
+def _verify_plan(sigs: DataFrame, sigs_b: DataFrame | None, docs: DataFrame,
+                 text_col: str, id_col: str, threshold_u: int, slot: str):
+    """Pick the exact-Jaccard verify strategy for a (cached) signature table
+    (``sigs_b``: the old side of a cross run) and produce its shingle-key
+    table.  Selective candidate streams join the key arrays onto the pairs;
+    dense ones amortize the per-worker side-file load.  The pick needs only
+    the sigs, so it runs BEFORE the key table is produced and the selective
+    path never writes the side file.  Returns (per-doc shingle counts,
+    verify(pairs), n_docs)."""
+    from . import _cache
+
+    id_type = sigs.schema[id_col].dataType.simpleString()
+    bound = _raw_pair_bound(sigs, sigs_b=sigs_b, id_col=id_col)
+    n_docs = sigs.count()  # cached by the bound probe — no recompute
+    if sigs_b is not None:
+        n_docs += sigs_b.count()
+    if bound <= MH_JOIN_VERIFY_RATIO * max(n_docs, 1):
+        keys_back = _cache.claim(
+            f"{slot}.keys_df", shingle_keys(docs, text_col, id_col)
+        )
+        verify = lambda pairs: _verify_pairs_join(  # noqa: E731
+            pairs, keys_back, id_col, id_type, threshold_u
+        )
+    else:
+        keys_dir = _claim_keys_dir(f"{slot}.keys")
+        shingle_keys(docs, text_col, id_col).write.parquet(keys_dir, mode="overwrite")
+        keys_back = docs.sparkSession.read.parquet(keys_dir)
+        verify = lambda pairs: _verify_pairs_on_keys(  # noqa: E731
+            pairs, keys_dir, id_type, threshold_u, spread=False
+        )
+    sizes = keys_back.select(id_col, F.size("keys").cast("long").alias("_nsh"))
+    return sizes, verify, n_docs
 
 
 def minhash_near_dups(docs: DataFrame, text_col: str = "text",
@@ -938,48 +950,23 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text",
     joins the key arrays onto the pair stream, moving only the candidate
     docs' keys; a DENSE candidate stream (millions of pairs) uses the
     side-file path, where each reused worker loads the key table once and
-    pairs shuffle ids only.  Breakeven: join-verify ships ~2*bound key
-    arrays once, the side file loads n_docs arrays in each of W workers,
-    so join wins while bound <~ (W/2)*n_docs; the default ratio 8 is half
-    that at W=32 and tunable via SPARK_GRAFT_MH_JOIN_VERIFY_RATIO for
-    other worker counts.  Both paths run the identical sorted-merge
-    intersect and IEEE jaccard math, so the result is bit-identical
-    (equality pytest pins it).
+    pairs shuffle ids only (see MH_JOIN_VERIFY_RATIO for the breakeven).
+    Both paths run the identical sorted-merge intersect and IEEE jaccard
+    math, so the result is bit-identical (equality pytest pins it).
     """
-    import os
-
     from . import _cache
 
-    spark = docs.sparkSession
     sigs = _cache.claim("minhash_near_dups.sigs", minhash_signatures(docs, text_col, id_col))
-    # strategy pick needs only the (cached) sigs — decided BEFORE the key
-    # table is produced, so the selective path never writes the side file
-    ratio = float(os.environ.get("SPARK_GRAFT_MH_JOIN_VERIFY_RATIO", "8"))
-    bound = _raw_pair_bound(sigs, id_col=id_col)
-    n_docs = sigs.count()  # cached by the bound probe — no recompute
-    id_type = docs.schema[id_col].dataType.simpleString()
-    if bound <= ratio * max(n_docs, 1):
-        keys_back = _cache.claim(
-            "minhash_near_dups.keys_df", shingle_keys(docs, text_col, id_col)
-        )
-        verify = lambda pairs: _verify_pairs_join(  # noqa: E731
-            pairs, keys_back, id_col, id_type, threshold_u
-        )
-    else:
-        keys_dir = _claim_keys_dir("minhash_near_dups.keys")
-        shingle_keys(docs, text_col, id_col).write.parquet(keys_dir, mode="overwrite")
-        keys_back = spark.read.parquet(keys_dir)
-        verify = lambda pairs: _verify_pairs_on_keys(  # noqa: E731
-            pairs, keys_dir, id_type, threshold_u, spread=False
-        )
-    sizes = keys_back.select(id_col, F.size("keys").cast("long").alias("_nsh"))
+    sizes, verify, n_docs = _verify_plan(
+        sigs, None, docs, text_col, id_col, threshold_u, "minhash_near_dups"
+    )
     # dedup=False: the candidate stream is verified in the SAME stage as the
     # band join (no candidate-set shuffle at all); the verify is
     # deterministic per pair, so distinct-after-verify on the tiny
     # thresholded output is identical to distinct-before-verify
     pairs = _fused_candidate_pairs(
         sigs, sizes, id_col, min_sig_matches, threshold_u, dedup=False,
-        broadcast_bands=n_docs <= _broadcast_max_docs(),
+        broadcast_bands=n_docs <= MH_BROADCAST_MAX_DOCS,
     )
     jac = verify(pairs)
     return jac.filter(F.col("jaccard_u") >= threshold_u).distinct()
@@ -1226,8 +1213,7 @@ def simhash_near_dups(docs: DataFrame, text_col: str = "text",
 
 
 def line_dedup_docs(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    digest_keys: bool = False) -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """C4-style corpus-wide line dedup: split each document on '\\n'; every
     duplicated line survives only at its FIRST (doc_id, idx) occurrence.
 
@@ -1236,23 +1222,15 @@ def line_dedup_docs(docs: DataFrame, text_col: str = "text",
 
     Scale shape: ONE window partitioned by the line — group size is that
     line's duplication count, bounded by corpus duplication, never corpus
-    size — plus one hash aggregate to reassemble.
-
-    ``digest_keys`` is the petabyte knob: partition the window on
-    md5(line) (128-bit digest) instead of the raw line, so the shuffle
-    carries fixed-width 32-byte keys instead of arbitrarily long line text
-    in the KEY position (the line still rides along as a value column for
-    reassembly).  Result-identical to the raw-line plan unless two distinct
-    lines collide under md5 — negligible (~2^-64 birthday bound) at any
-    real corpus size; the raw-line default keeps the DuckDB oracle twin
-    collision-proof by construction.
+    size — plus one hash aggregate to reassemble.  The window keys on the
+    raw line, which keeps the DuckDB oracle twin collision-proof by
+    construction.
     """
     lines = docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "line"),
     )
-    part = F.md5("line") if digest_keys else F.col("line")
-    w = Window.partitionBy(part).orderBy("doc_id", "idx")
+    w = Window.partitionBy(F.col("line")).orderBy("doc_id", "idx")
     flagged = lines.withColumn(
         "keep", (F.row_number().over(w) == 1).cast("int")
     )

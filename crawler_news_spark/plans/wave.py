@@ -21,9 +21,7 @@ pages ascending :113-118, links in listing document order).
 
 from __future__ import annotations
 
-import os
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,47 +37,12 @@ from ..sources import hostsim as hs
 from .catalog import CrawlCatalog
 
 
-class _WaveProfiler:
-    """Per-phase wall-clock ledger for the wave loop (SPARK_GRAFT_PROFILE=1).
-
-    Every driver-synchronous section of a wave (each Spark action, catalog
-    write, commit) is timed; ``summary()`` aggregates seconds per label
-    across waves.  This is the instrument behind BENCH.md's fixed-cost
-    breakdown: the crawl's ~work scales with cores, so whatever does NOT
-    shrink between local[8] and local[32] legs is per-run fixed cost.
-    Disabled (zero overhead beyond one attribute test) unless the env var
-    is set.
-    """
-
-    def __init__(self) -> None:
-        self.enabled = os.environ.get("SPARK_GRAFT_PROFILE", "") not in ("", "0")
-        self.rows: list[tuple[int, str, float]] = []
-
-    @contextmanager
-    def t(self, wave: int, label: str):
-        if not self.enabled:
-            yield
-            return
-        t0 = time.time()
-        try:
-            yield
-        finally:
-            self.rows.append((wave, label, time.time() - t0))
-
-    def summary(self) -> dict[str, float]:
-        agg: dict[str, float] = {}
-        for _w, label, s in self.rows:
-            agg[label] = agg.get(label, 0.0) + s
-        return {k: round(v, 3) for k, v in sorted(agg.items(), key=lambda kv: -kv[1])}
-
-
 @dataclass
 class CrawlRunConfig:
     batch_pages: int = 4  # reference num_workers (crawler_config.yml:17)
     max_waves: int = 100
     bloom_buckets: int = 8  # raise to ~4096 at 10^10 scale
     bloom_expected_per_bucket: int = 4096
-    use_bloom: bool = True
     seen_filter: str = "bloom"  # 'bloom' | 'cuckoo' (deletion-capable)
     created_at: str = "2026-01-01T00:00:00+00:00"  # deterministic createdAt stamp
     write_parts: int | None = 8  # coalesce small wave deltas; None at cluster scale
@@ -100,7 +63,6 @@ class WaveCrawl:
         self.spark = spark
         self.web = web
         self.cfg = run_cfg or CrawlRunConfig()
-        self.prof = _WaveProfiler()
         self.cat = CrawlCatalog(catalog_root, spark)
         self.hosts_df = spark.createDataFrame(
             [tuple(r[f.name] for f in SCH.HOSTS.fields) for r in hs.hosts_rows(web)],
@@ -264,12 +226,11 @@ class WaveCrawl:
             # on a fresh catalog — the reference's task:"url" mode) wins over
             # the full type-taxonomy seed
             if not cat.has("frontier", 0):
-                with self.prof.t(-1, "seed_write"):
-                    # same small-delta coalesce as every other wave write:
-                    # the seed is hosts x types rows, and writing it at the
-                    # scan's default parallelism costs ~2x in file tasks
-                    cat.write("frontier", 0, self.seed_frontier(),
-                              self.cfg.write_parts)
+                # same small-delta coalesce as every other wave write:
+                # the seed is hosts x types rows, and writing it at the
+                # scan's default parallelism costs ~2x in file tasks
+                cat.write("frontier", 0, self.seed_frontier(),
+                          self.cfg.write_parts)
                 # the seed is pure listings and its size is a config identity
                 # (Σ over hosts of n_types x n_seed_pages) — no wave-0
                 # collect; _run_wave's tagged-dir guard still re-counts if
@@ -297,14 +258,6 @@ class WaveCrawl:
             frontier = cat.read_wave("frontier", wave)
         stats["n_waves"] = wave
         stats["t_end"] = time.time()
-        if self.prof.enabled:
-            import json as _json
-            import sys as _sys
-
-            print(
-                "WAVE_PROFILE " + _json.dumps(self.prof.summary()),
-                file=_sys.stderr,
-            )
         return stats
 
     # ------------------------------------------------------------------
@@ -376,8 +329,7 @@ class WaveCrawl:
                 )
                 .withColumn("wave", F.lit(wave + 1))
             ).cache()
-            with self.prof.t(wave, "budget_count"):
-                n_deferred = deferred.count()  # also materializes the take cache
+            n_deferred = deferred.count()  # also materializes the take cache
             if n_deferred == 0:
                 deferred.unpersist()
                 deferred = None
@@ -392,10 +344,9 @@ class WaveCrawl:
         else:
             budget_take = None
 
-        with self.prof.t(wave, "schedule"):
-            scheduled, new_clock_df, totals, art_sched_counts = pol.schedule_wave(
-                frontier, self.delay_dim, clock_df, totals_hint
-            )
+        scheduled, new_clock_df, totals, art_sched_counts = pol.schedule_wave(
+            frontier, self.delay_dim, clock_df, totals_hint
+        )
         has_listings = totals["listing"] > 0
         has_articles = totals["article"] > 0
         if has_listings or has_articles:
@@ -416,11 +367,10 @@ class WaveCrawl:
         bg_threads: list[threading.Thread] = []
         bg_errs: list[BaseException] = []
 
-        def _bg(label: str, fn):
+        def _bg(fn):
             def _run():
                 try:
-                    with self.prof.t(wave, label):
-                        fn()
+                    fn()
                 except BaseException as e:  # re-raised at the pre-commit join
                     bg_errs.append(e)
 
@@ -428,11 +378,10 @@ class WaveCrawl:
             th.start()
             bg_threads.append(th)
 
-        _bg("clock_write", lambda: cat.write("clock", wave, new_clock_df, parts))
+        _bg(lambda: cat.write("clock", wave, new_clock_df, parts))
 
         # newest merged filter state (includes inject_requests pre-writes)
-        with self.prof.t(wave, "bloom_read"):
-            bloom_tbl = cat.read_latest_state("bloom", wave)
+        bloom_tbl = cat.read_latest_state("bloom", wave)
         n_bloom_fp = 0
         n_new = 0
         lineage_parts = []
@@ -478,7 +427,7 @@ class WaveCrawl:
             # bloom prefilter + exact anti-join (bloom advisory, join exact);
             # upto ``wave`` so injected same-wave seen deltas participate
             seen_tbl = cat.read_upto("seen", wave)
-            if cfg.use_bloom and seen_tbl is not None and bloom_tbl is not None:
+            if seen_tbl is not None and bloom_tbl is not None:
                 new_rows, recovered = S.seen_anti_join(
                     candidates, seen_tbl, self.bloom_state, bloom_tbl
                 )
@@ -489,8 +438,7 @@ class WaveCrawl:
             # cache; the remaining wave scalars (n_listing_next, n_bloom_fp)
             # are counted in ONE follow-up job below — each standalone
             # count() is ~0.5-1 s of job overhead per wave (r04 profile)
-            with self.prof.t(wave, "listings_fetch_parse"):
-                n_new = new_rows.count()
+            n_new = new_rows.count()
 
             # stop rule + next listing batch — fully distributed: the
             # continuing (host, type) groups explode their next B pages and
@@ -547,13 +495,12 @@ class WaveCrawl:
                 scalar_df = scalar_df.unionByName(
                     recovered.select(F.lit("fp").alias("_k"))
                 )
-            with self.prof.t(wave, "scalars"):
-                scalars = {
-                    r["_k"]: int(r["n"])
-                    for r in scalar_df.groupBy("_k")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
+            scalars = {
+                r["_k"]: int(r["n"])
+                for r in scalar_df.groupBy("_k")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            }
             n_listing_next = scalars.get("nxt", 0)
             n_bloom_fp = scalars.get("fp", 0)
 
@@ -575,7 +522,7 @@ class WaveCrawl:
                 seen_delta_new = new_rows.select(
                     "canonical_hash", "canonical_url", F.lit(wave).alias("wave")
                 )
-                _bg("seen_write", lambda: cat.write("seen", wave, seen_delta_new, parts))
+                _bg(lambda: cat.write("seen", wave, seen_delta_new, parts))
 
             # next-wave article rows; priority = depth + recency proxy
             next_articles = new_rows.select(
@@ -612,20 +559,17 @@ class WaveCrawl:
             next_frontier = parts_list[0]
             for extra in parts_list[1:]:
                 next_frontier = next_frontier.unionByName(extra)
-            _bg(
-                "frontier_write",
-                lambda nf=next_frontier: cat.write("frontier", wave + 1, nf, parts),
-            )
+            _bg(lambda nf=next_frontier: cat.write("frontier", wave + 1, nf, parts))
 
         # ---------- seen-filter delta update (skipped when nothing new) ----------
         # NB: only the pure-new rows go into the filter — injected rows were
         # already inserted by inject_requests (idempotent for bloom; a cuckoo
         # double-insert would waste slots and break delete symmetry)
-        if cfg.use_bloom and n_new > 0:
+        if n_new > 0:
             merged = self.bloom_state.update(
                 bloom_tbl, seen_delta_new.select("canonical_hash"), spark
             )
-            _bg("bloom_update_write", lambda: cat.write("bloom", wave, merged, parts))
+            _bg(lambda: cat.write("bloom", wave, merged, parts))
 
         # ---------- articles: fetch/parse -> records + spans ----------
         # single pass, NO cache: caching the parsed output would serialize
@@ -694,8 +638,7 @@ class WaveCrawl:
             )
             # natural partitioning: a coalesce here would propagate UP the
             # narrow chain and collapse the fetch+parse stage's parallelism
-            with self.prof.t(wave, "articles_fetch_parse_write"):
-                cat.write("articles", wave, records, None)
+            cat.write("articles", wave, records, None)
             # lineage: parsed counts from the snapshot just written (reads
             # only the host column) joined against the scheduled counts —
             # errors = scheduled - parsed, all DataFrame-side (no per-host
@@ -736,32 +679,29 @@ class WaveCrawl:
                 .withColumn("t_start", F.lit(t0))
                 .withColumn("t_end", F.lit(t1))
             )
-            with self.prof.t(wave, "lineage_write"):
-                cat.write("lineage", wave, lineage, parts)
+            cat.write("lineage", wave, lineage, parts)
 
         # per-host virtual clock: a catalog state table (crash-safe with the
         # wave commit; resume reads it back) — written concurrently above,
         # joined here so the commit covers it
-        with self.prof.t(wave, "bg_join"):
-            for th in bg_threads:
-                th.join()
+        for th in bg_threads:
+            th.join()
         if bg_errs:
             raise bg_errs[0]
         if deferred is not None:
             deferred.unpersist()
         if budget_take is not None:
             budget_take.unpersist()
-        with self.prof.t(wave, "commit"):
-            cat.commit_wave(
-                wave,
-                {
-                    "n_fetched": totals["listing"] + totals["article"],
-                    "n_new_urls": n_new,
-                    "n_next": n_next,
-                    "n_bloom_fp": n_bloom_fp,
-                    "wall_s": time.time() - t0,
-                },
-            )
+        cat.commit_wave(
+            wave,
+            {
+                "n_fetched": totals["listing"] + totals["article"],
+                "n_new_urls": n_new,
+                "n_next": n_next,
+                "n_bloom_fp": n_bloom_fp,
+                "wall_s": time.time() - t0,
+            },
+        )
         for df in (scheduled,):
             try:
                 df.unpersist()
@@ -825,26 +765,25 @@ class WaveCrawl:
         _os.makedirs(cat._dir("seen"))
         _os.rename(tmpdir, cat._dir("seen", last))
         kept.unpersist()
-        if self.cfg.use_bloom:
-            # the new filter state is written TAGGED at last+1: a plain write
-            # at ``last`` would be shadowed by any pre-existing inject tag at
-            # last+1 (read_latest_state prefers the higher slot), resurrecting
-            # the evicted entries
-            if self.cfg.seen_filter == "cuckoo":
-                # the whole point of the cuckoo fallback: targeted deletes,
-                # no full-filter rebuild
-                tbl = cat.read_latest_state("bloom", last + 1).localCheckpoint()
-                cat.write_tagged(
-                    "bloom", last + 1, self.bloom_state.delete(tbl, ev_present),
-                    self.cfg.write_parts,
-                )
-            else:
-                # bloom can't delete: rebuild from the compacted seen set
-                merged = self.bloom_state.update(
-                    None, cat.read_wave("seen", last).select("canonical_hash"),
-                    self.spark,
-                )
-                cat.write_tagged("bloom", last + 1, merged, self.cfg.write_parts)
+        # the new filter state is written TAGGED at last+1: a plain write
+        # at ``last`` would be shadowed by any pre-existing inject tag at
+        # last+1 (read_latest_state prefers the higher slot), resurrecting
+        # the evicted entries
+        if self.cfg.seen_filter == "cuckoo":
+            # the whole point of the cuckoo fallback: targeted deletes,
+            # no full-filter rebuild
+            tbl = cat.read_latest_state("bloom", last + 1).localCheckpoint()
+            cat.write_tagged(
+                "bloom", last + 1, self.bloom_state.delete(tbl, ev_present),
+                self.cfg.write_parts,
+            )
+        else:
+            # bloom can't delete: rebuild from the compacted seen set
+            merged = self.bloom_state.update(
+                None, cat.read_wave("seen", last).select("canonical_hash"),
+                self.spark,
+            )
+            cat.write_tagged("bloom", last + 1, merged, self.cfg.write_parts)
         return n_before - n_kept
 
     def crawl_url_list(self, urls: list[str], skip_seen: bool = True) -> int:
@@ -922,14 +861,13 @@ class WaveCrawl:
             ).localCheckpoint()
             if not new_seen.isEmpty():
                 cat.write_tagged("seen", wave, new_seen, self.cfg.write_parts)
-                if self.cfg.use_bloom:
-                    base = cat.read_latest_state("bloom", wave)
-                    if base is not None:
-                        base = base.localCheckpoint()
-                    merged = self.bloom_state.update(
-                        base, new_seen.select("canonical_hash"), self.spark
-                    )
-                    cat.write_tagged("bloom", wave, merged, self.cfg.write_parts)
+                base = cat.read_latest_state("bloom", wave)
+                if base is not None:
+                    base = base.localCheckpoint()
+                merged = self.bloom_state.update(
+                    base, new_seen.select("canonical_hash"), self.spark
+                )
+                cat.write_tagged("bloom", wave, merged, self.cfg.write_parts)
         f.unpersist()
         return n
 

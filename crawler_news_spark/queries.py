@@ -2492,17 +2492,11 @@ def q_line_dedup(spark, sf_dir):
     Scale shape: one window partitioned by the line text (high cardinality
     — group sizes are the line's duplication count, bounded by corpus
     duplication, not corpus size) and one hash aggregate to reassemble.
-    At petabyte scale the production knob is partitioning by a 128-bit
-    line digest instead of the raw text (md5 collisions are negligible at
-    any real corpus size, and the shuffle then carries fixed-width keys);
-    the oracle-exact form here keeps the raw line so the twin is
-    collision-proof by construction.
+    Keying on the raw line keeps the twin collision-proof by construction.
     Wire-syndicated duplicates make this bite hard: a byte-exact republished
     article loses every line (clean_hash of the empty string).
 
-    Implementation: operators/dedup.py line_dedup_docs (raw-line keys; the
-    md5 digest-key production variant is the same operator with
-    digest_keys=True, equality-tested at sf0.1)."""
+    Implementation: operators/dedup.py line_dedup_docs (raw-line keys)."""
     return DD.line_dedup_docs(_corpus_bodies(spark))
 
 
@@ -2691,19 +2685,15 @@ def q_dup_span_report(spark, sf_dir):
     on the window string to find recurring windows (group size = that
     window's recurrence count — bounded by corpus duplication, like
     line_dedup), broadcast-able/shuffle hash join back, one per-doc
-    aggregate.  No window function at all.  The petabyte knob is the same
-    as line_dedup_docs: key the aggregate on a 128-bit digest of the
-    window instead of the raw string; the raw-string form keeps the DuckDB
-    twin collision-proof by construction."""
+    aggregate.  No window function at all.  The aggregate keys on a
+    128-bit digest of the window instead of the raw string (fixed-width
+    shuffle keys); the DuckDB twin keys on the raw string."""
     return _dup_span_report_frame(load(spark, sf_dir, "documents"))
 
 
-def _dup_span_report_frame(docs: DataFrame, digest_keys: bool = False) -> DataFrame:
+def _dup_span_report_frame(docs: DataFrame) -> DataFrame:
     """Frame-level body of :func:`q_dup_span_report` over any (doc_id,
-    text) table.  ``digest_keys`` is the petabyte knob: aggregate and join
-    on md5(window) — fixed-width 128-bit shuffle keys instead of K-token
-    strings (the identical trade line_dedup_docs makes; equality-tested on
-    the re-lined sf0.1 fixture)."""
+    text) table."""
     toks = F.regexp_extract_all(F.trim(F.col("text")), F.lit(r"\S+"), F.lit(0))
     k = DUP_SPAN_K
     # r09 plan: the digest-keyed one-shuffle flag pass shared with
@@ -2772,8 +2762,8 @@ def q_dup_span_dedup(spark, sf_dir):
     that window's recurrence count, never corpus size) with a min-struct
     first-occurrence agg — no window function anywhere; coverage expansion
     is a bounded explode (x{K}); reassembly is one per-doc aggregate.  The
-    petabyte knob is the same as line_dedup_docs: aggregate on a 128-bit
-    digest of the window for fixed-width shuffle keys."""
+    aggregate keys on a 128-bit digest of the window for fixed-width
+    shuffle keys."""
     return _dup_span_dedup_frame(load(spark, sf_dir, "documents"))
 
 
@@ -2869,12 +2859,9 @@ def _dup_span_flagged(docs: DataFrame, k: int, report: bool = False) -> DataFram
     return spread.mapInArrow(flag, f"doc_id {id_type}, pos bigint")
 
 
-def _dup_span_dedup_frame(docs: DataFrame, digest_keys: bool = False) -> DataFrame:
+def _dup_span_dedup_frame(docs: DataFrame) -> DataFrame:
     """Frame-level body of :func:`q_dup_span_dedup` over any (doc_id, text)
     table — reused by the 10x replication-invariance spot-check.
-    ``digest_keys`` aggregates on md5(window) — fixed-width 128-bit shuffle
-    keys — instead of the raw K-token strings (the petabyte knob;
-    equality-tested on the re-lined sf0.1 fixture).
 
     r09 plan: ONE corpus-wide shuffle of fixed-width digests
     (_dup_span_flagged: md5(window) keys, per-task dict min pass replaying
@@ -2884,7 +2871,7 @@ def _dup_span_dedup_frame(docs: DataFrame, digest_keys: bool = False) -> DataFra
     window-string subtree twice, joined it back, anti-joined an exploded
     coverage table against the exploded token table and rebuilt text via
     collect_list — four more token-level string exchanges for the identical
-    result (``digest_keys`` is vestigial: keys are always digests now)."""
+    result."""
     k = DUP_SPAN_K
     flagged = _dup_span_flagged(docs, k)
     flpos = flagged.groupBy("doc_id").agg(F.collect_list("pos").alias("_fl"))
@@ -3293,155 +3280,99 @@ SQL_TFIDF_TOP_TERMS = r"""
 # ---------------------------------------------------------------------------
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def _registry() -> list[tuple[str, Callable[[SparkSession, str], DataFrame], str]]:
+    """One row per query: (name, Spark builder, DuckDB twin SQL)."""
     # NOTE on ordering: the driver's correctness gate oracles the FIRST 50
     # entries in dict-insertion order.  The window ROTATES each round
     # (ADVICE r07 #4) so every entry is periodically driver-checked: the 13
     # entries outside r07's window (judge-verified that round) lead in r08,
     # the 12 r07-rotated entries keep their second consecutive driver round,
     # and 13 entries driver-proven three rounds running (r05-r07) take their
-    # turn at the back — still covered by the builder's full 3-SF gate.
-    return {
+    # turn at the back — still covered by the repo's full 3-SF gate.
+    return [
         # --- outside the driver window in r07 (judge-checked then) ---
-        "simhash_near_dups": q_simhash_near_dups,
-        "cosine_topk": q_cosine_topk,
-        "lsh_topk": q_lsh_topk,
-        "ivf_topk": q_ivf_topk,
-        "ann_recall": q_ann_recall,
-        "winnow_pairs": q_winnow_pairs,
-        "embedding_near_dups_lsh": q_embedding_near_dups_lsh,
-        "semantic_dedup": q_semantic_dedup,
-        "media_metadata": q_media_metadata,
-        "frame_sample": q_frame_sample,
-        "media_resize": q_media_resize,
-        "media_features": q_media_features,
-        "crawl_flagship": q_crawl_flagship,
+        ("simhash_near_dups", q_simhash_near_dups, SQL_SIMHASH_NEAR_DUPS),
+        ("cosine_topk", q_cosine_topk, SIM.sql_cosine_topk(5, 10)),
+        ("lsh_topk", q_lsh_topk, SIM.sql_lsh_topk(5, 10, n_planes=6, dim=64, seed=42)),
+        ("ivf_topk", q_ivf_topk,
+         SIM.sql_ivf_topk(5, 10, n_clusters=16, n_probe=6, n_iter=2, dim=64)),
+        ("ann_recall", q_ann_recall, _sql_ann_recall(5, 10)),
+        ("winnow_pairs", q_winnow_pairs, _sql_winnow_pairs(20, 1000)),
+        ("embedding_near_dups_lsh", q_embedding_near_dups_lsh,
+         SIM.sql_embedding_near_dups_lsh(900_000, n_planes=8, dim=64, seed=42)),
+        ("semantic_dedup", q_semantic_dedup,
+         SIM.sql_semantic_dedup(900_000, n_clusters=16, n_iter=2, dim=64)),
+        ("media_metadata", q_media_metadata, SQL_MEDIA_META),
+        ("frame_sample", q_frame_sample, SQL_FRAME_SAMPLE),
+        ("media_resize", q_media_resize, SQL_MEDIA_RESIZE),
+        ("media_features", q_media_features, _sql_media_features(16)),
+        ("crawl_flagship", q_crawl_flagship, _sql_crawl_flagship()),
         # --- rotated to front in r07; second consecutive driver round ---
-        "corpus_update": q_corpus_update,
-        "line_dedup": q_line_dedup,
-        "boilerplate_strip": q_boilerplate_strip,
-        "near_dup_components": q_near_dup_components,
-        "corpus_stage_counts": q_corpus_stage_counts,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "dup_span_report": q_dup_span_report,
-        "dup_span_dedup": q_dup_span_dedup,
-        "token_budget_mix": q_token_budget_mix,
-        "rare_token_score": q_rare_token_score,
-        "vocab_oov_rate": q_vocab_oov_rate,
-        "ngram_novelty": q_ngram_novelty,
+        ("corpus_update", q_corpus_update, _sql_corpus_update()),
+        ("line_dedup", q_line_dedup, _sql_line_dedup()),
+        ("boilerplate_strip", q_boilerplate_strip, _sql_boilerplate_strip()),
+        ("near_dup_components", q_near_dup_components, SQL_NEAR_DUP_COMPONENTS),
+        ("corpus_stage_counts", q_corpus_stage_counts, _sql_corpus_stage_counts()),
+        ("tfidf_top_terms", q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
+        ("dup_span_report", q_dup_span_report, SQL_DUP_SPAN_REPORT),
+        ("dup_span_dedup", q_dup_span_dedup, SQL_DUP_SPAN_DEDUP),
+        ("token_budget_mix", q_token_budget_mix, SQL_TOKEN_BUDGET_MIX),
+        ("rare_token_score", q_rare_token_score, SQL_RARE_TOKEN_SCORE),
+        ("vocab_oov_rate", q_vocab_oov_rate, SQL_VOCAB_OOV_RATE),
+        ("ngram_novelty", q_ngram_novelty, SQL_NGRAM_NOVELTY),
         # --- fixture changed in r07 (paraphrase syndication branch) ---
-        "corpus_build_semantic": q_corpus_build_semantic,
-        "corpus_build": q_corpus_build,
+        ("corpus_build_semantic", q_corpus_build_semantic,
+         _sql_corpus_build(semantic=True)),
+        ("corpus_build", q_corpus_build, _sql_corpus_build()),
         # --- driver-proven in r05-r07; stays within the first-50 window ---
-        "keepfirst_dedup": q_keepfirst_dedup,
-        "dup_groups": q_dup_groups,
-        "exact_dedup": q_exact_dedup,
-        "pivot_events": q_pivot_events,
-        "top_revenue_nations": q_top_revenue_nations,
-        "order_priority_count": q_order_priority_count,
-        "shipping_priority": q_shipping_priority,
-        "length_percentiles": q_length_percentiles,
-        "promo_revenue": q_promo_revenue,
-        "supplier_geography": q_supplier_geography,
-        "hash_sample": q_hash_sample,
-        "stratified_sample": q_stratified_sample,
-        "pack_sequences": q_pack_sequences,
-        "token_count": q_token_count,
-        "lang_id": q_lang_id,
-        "quality_score": q_quality_score,
-        "fingerprint": q_fingerprint,
-        "repetition_quality": q_repetition_quality,
-        "decontaminate": q_decontaminate,
-        "top_keywords": q_top_keywords,
-        "minhash_signatures": q_minhash_signatures,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "minhash_near_dups": q_minhash_near_dups,
+        ("keepfirst_dedup", q_keepfirst_dedup, SQL_KEEPFIRST),
+        ("dup_groups", q_dup_groups, SQL_DUP_GROUPS),
+        ("exact_dedup", q_exact_dedup, SQL_EXACT_DEDUP),
+        ("pivot_events", q_pivot_events, SQL_PIVOT),
+        ("top_revenue_nations", q_top_revenue_nations, SQL_TOP_REVENUE_NATIONS),
+        ("order_priority_count", q_order_priority_count, SQL_ORDER_PRIORITY),
+        ("shipping_priority", q_shipping_priority, SQL_SHIPPING_PRIORITY),
+        ("length_percentiles", q_length_percentiles, SQL_LENGTH_PERCENTILES),
+        ("promo_revenue", q_promo_revenue, SQL_PROMO_REVENUE),
+        ("supplier_geography", q_supplier_geography, SQL_SUPPLIER_GEOGRAPHY),
+        ("hash_sample", q_hash_sample, SQL_HASH_SAMPLE),
+        ("stratified_sample", q_stratified_sample, SQL_STRATIFIED_SAMPLE),
+        ("pack_sequences", q_pack_sequences, SQL_PACK_SEQUENCES),
+        ("token_count", q_token_count, SQL_TOKEN_COUNT),
+        ("lang_id", q_lang_id,
+         f"SELECT doc_id, {TX.sql_lang_id()} AS lang_pred FROM documents"),
+        ("quality_score", q_quality_score,
+         f"SELECT doc_id, {TX.sql_quality_score()} AS quality_u FROM documents"),
+        ("fingerprint", q_fingerprint, SQL_FINGERPRINT_Q),
+        ("repetition_quality", q_repetition_quality, SQL_REPETITION),
+        ("decontaminate", q_decontaminate, SQL_DECONTAMINATE),
+        ("top_keywords", q_top_keywords, _sql_top_keywords()),
+        ("minhash_signatures", q_minhash_signatures, SQL_MINHASH_SIGS),
+        ("minhash_lsh_pairs", q_minhash_lsh_pairs, SQL_MINHASH_PAIRS),
+        ("minhash_near_dups", q_minhash_near_dups, SQL_MINHASH_NEAR_DUPS),
         # --- rotated to the back in r08 (driver-green r05, r06 AND r07;
         # the repo-local 3-SF gate still runs every one each round) ---
-        "date_range": q_date_range,
-        "date_range_typed": q_date_range_typed,
-        "group_count": q_group_count,
-        "category_filter": q_category_filter,
-        "md5_prefix": q_md5_prefix,
-        "datasource_extract": q_datasource_extract,
-        "image_path": q_image_path,
-        "images_metadata": q_images_metadata,
-        "topk_per_group": q_topk_per_group,
-        "pricing_summary": q_pricing_summary,
-        "sessionize": q_sessionize,
-        "windowed_counts": q_windowed_counts,
-        "rollup_revenue": q_rollup_revenue,
-    }
+        ("date_range", q_date_range, SQL_DATE_RANGE),
+        ("date_range_typed", q_date_range_typed, SQL_DATE_RANGE_TYPED),
+        ("group_count", q_group_count, SQL_GROUP_COUNT),
+        ("category_filter", q_category_filter, SQL_CATEGORY_FILTER),
+        ("md5_prefix", q_md5_prefix, SQL_MD5_PREFIX),
+        ("datasource_extract", q_datasource_extract, SQL_DATASOURCE),
+        ("image_path", q_image_path, SQL_IMAGE_PATH),
+        ("images_metadata", q_images_metadata, SQL_IMAGES_METADATA),
+        ("topk_per_group", q_topk_per_group, SQL_TOPK_PER_GROUP),
+        ("pricing_summary", q_pricing_summary, SQL_PRICING),
+        ("sessionize", q_sessionize, SQL_SESSIONIZE),
+        ("windowed_counts", q_windowed_counts, SQL_WINDOWED),
+        ("rollup_revenue", q_rollup_revenue, SQL_ROLLUP),
+    ]
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Spark builders by name, in registry order."""
+    return {name: build for name, build, _twin in _registry()}
 
 
 def oracle_sql() -> dict[str, str]:
-    # Mirrors queries() ordering (see the ordering note there).
-    return {
-        "corpus_update": _sql_corpus_update(),
-        "line_dedup": _sql_line_dedup(),
-        "boilerplate_strip": _sql_boilerplate_strip(),
-        "near_dup_components": SQL_NEAR_DUP_COMPONENTS,
-        "corpus_stage_counts": _sql_corpus_stage_counts(),
-        "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-        "dup_span_report": SQL_DUP_SPAN_REPORT,
-        "dup_span_dedup": SQL_DUP_SPAN_DEDUP,
-        "token_budget_mix": SQL_TOKEN_BUDGET_MIX,
-        "rare_token_score": SQL_RARE_TOKEN_SCORE,
-        "vocab_oov_rate": SQL_VOCAB_OOV_RATE,
-        "ngram_novelty": SQL_NGRAM_NOVELTY,
-        "corpus_build_semantic": _sql_corpus_build(semantic=True),
-        "corpus_build": _sql_corpus_build(),
-        "keepfirst_dedup": SQL_KEEPFIRST,
-        "dup_groups": SQL_DUP_GROUPS,
-        "exact_dedup": SQL_EXACT_DEDUP,
-        "date_range": SQL_DATE_RANGE,
-        "date_range_typed": SQL_DATE_RANGE_TYPED,
-        "group_count": SQL_GROUP_COUNT,
-        "category_filter": SQL_CATEGORY_FILTER,
-        "md5_prefix": SQL_MD5_PREFIX,
-        "datasource_extract": SQL_DATASOURCE,
-        "image_path": SQL_IMAGE_PATH,
-        "images_metadata": SQL_IMAGES_METADATA,
-        "topk_per_group": SQL_TOPK_PER_GROUP,
-        "pricing_summary": SQL_PRICING,
-        "sessionize": SQL_SESSIONIZE,
-        "windowed_counts": SQL_WINDOWED,
-        "rollup_revenue": SQL_ROLLUP,
-        "pivot_events": SQL_PIVOT,
-        "top_revenue_nations": SQL_TOP_REVENUE_NATIONS,
-        "order_priority_count": SQL_ORDER_PRIORITY,
-        "shipping_priority": SQL_SHIPPING_PRIORITY,
-        "length_percentiles": SQL_LENGTH_PERCENTILES,
-        "promo_revenue": SQL_PROMO_REVENUE,
-        "supplier_geography": SQL_SUPPLIER_GEOGRAPHY,
-        "hash_sample": SQL_HASH_SAMPLE,
-        "stratified_sample": SQL_STRATIFIED_SAMPLE,
-        "pack_sequences": SQL_PACK_SEQUENCES,
-        "token_count": SQL_TOKEN_COUNT,
-        "lang_id": f"SELECT doc_id, {TX.sql_lang_id()} AS lang_pred FROM documents",
-        "quality_score": f"SELECT doc_id, {TX.sql_quality_score()} AS quality_u FROM documents",
-        "fingerprint": SQL_FINGERPRINT_Q,
-        "repetition_quality": SQL_REPETITION,
-        "decontaminate": SQL_DECONTAMINATE,
-        "top_keywords": _sql_top_keywords(),
-        "minhash_signatures": SQL_MINHASH_SIGS,
-        "minhash_lsh_pairs": SQL_MINHASH_PAIRS,
-        "minhash_near_dups": SQL_MINHASH_NEAR_DUPS,
-        "simhash_near_dups": SQL_SIMHASH_NEAR_DUPS,
-        "cosine_topk": SIM.sql_cosine_topk(5, 10),
-        "lsh_topk": SIM.sql_lsh_topk(5, 10, n_planes=6, dim=64, seed=42),
-        "ivf_topk": SIM.sql_ivf_topk(5, 10, n_clusters=16, n_probe=6, n_iter=2, dim=64),
-        "ann_recall": _sql_ann_recall(5, 10),
-        "embedding_near_dups_lsh": SIM.sql_embedding_near_dups_lsh(
-            900_000, n_planes=8, dim=64, seed=42
-        ),
-        "semantic_dedup": SIM.sql_semantic_dedup(
-            900_000, n_clusters=16, n_iter=2, dim=64
-        ),
-        "media_metadata": SQL_MEDIA_META,
-        "frame_sample": SQL_FRAME_SAMPLE,
-        "media_resize": SQL_MEDIA_RESIZE,
-        "media_features": _sql_media_features(16),
-        "winnow_pairs": _sql_winnow_pairs(20, 1000),
-        "crawl_flagship": _sql_crawl_flagship(),
-    }
+    """DuckDB twin SQL by name, in the same order as :func:`queries`."""
+    return {name: twin for name, _build, twin in _registry()}

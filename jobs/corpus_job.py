@@ -4,7 +4,8 @@
 Crawls a (syndicated) web and runs the full training-corpus pipeline —
 quality gate, exact dedup, MinHash+LSH near-dup removal, eval-set
 decontamination, sequence packing — writing the packed corpus and a
-per-stage count manifest:
+per-stage count manifest (``scripts/package_pyfiles.sh`` builds the
+--py-files zip from the current package):
 
     ./scripts/package_pyfiles.sh
     spark-submit --master <cluster> \

@@ -1,9 +1,13 @@
 #!/usr/bin/env python
 """spark-submit entrypoint for the crawl engine.
 
-Cluster usage (north_rule: multi-executor via --py-files):
+Build the --py-files zip from the current package first (it is not kept
+in the repo, so it never ships stale code):
 
     ./scripts/package_pyfiles.sh
+
+Cluster usage (north_rule: multi-executor via --py-files):
+
     spark-submit --master <cluster> \
         --py-files dist/crawler_news_spark.zip \
         jobs/crawl_job.py --catalog /path/to/catalog --web bench --types 256

@@ -3,8 +3,10 @@
 cronjobs/cron_job.py:5-21 — the daily job that re-crawls selected URLs).
 
 The cron *scheduler* stays outside (cron/airflow/k8s CronJob — policy, not
-engine); this job is the body it invokes:
+engine); this job is the body it invokes (``scripts/package_pyfiles.sh``
+builds the --py-files zip from the current package):
 
+    ./scripts/package_pyfiles.sh
     spark-submit --master <cluster> --py-files dist/crawler_news_spark.zip \
         jobs/recrawl_job.py --catalog /path/to/catalog --web default \
         [--urls-file urls.txt | --category-prefix /tin-tức] [--dry-run]

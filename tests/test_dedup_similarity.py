@@ -467,54 +467,6 @@ def test_ivf_topk_bulk_queries_no_driver_collect(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
 
-def test_line_dedup_digest_keys_equal_raw_sf01(spark):
-    """The petabyte knob (window partitioned on md5(line) — fixed-width
-    shuffle keys) is result-identical to the raw-line plan on the full
-    sf0.1 documents table, re-lined into 10-word lines so cross-doc line
-    duplication is heavy (tiny vocabulary => thousands of repeated lines)."""
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    words = F.split("text", " ")
-    n_lines = F.greatest(
-        F.lit(1), F.ceil(F.size(words) / F.lit(10)).cast("int")
-    )
-    relined = docs.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.sequence(F.lit(0), n_lines - 1),
-                lambda i: F.concat_ws(" ", F.slice(words, i * 10 + 1, 10)),
-            ),
-        ).alias("text"),
-    )
-    raw = DD.line_dedup_docs(relined, digest_keys=False).collect()
-    dig = DD.line_dedup_docs(relined, digest_keys=True).collect()
-    assert sorted(map(tuple, raw)) == sorted(map(tuple, dig))
-    # sanity: the fixture actually has duplicated lines to dedup
-    assert sum(r["n_dropped"] for r in raw) > 0
-
-
-def test_dup_span_digest_keys_equal_raw_sf01(spark):
-    """The span family's petabyte knob (aggregate keyed on md5(window) —
-    fixed-width 128-bit shuffle keys instead of K-token strings) is
-    result-identical to the raw-string plan on the full sf0.1 documents
-    table, whose closed 31-token vocabulary makes 8-token windows recur
-    corpus-wide by the thousands."""
-    from crawler_news_spark import queries as Q
-
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-
-    rep_raw = Q._dup_span_report_frame(docs, digest_keys=False).collect()
-    rep_dig = Q._dup_span_report_frame(docs, digest_keys=True).collect()
-    assert sorted(map(tuple, rep_raw)) == sorted(map(tuple, rep_dig))
-    assert sum(r["n_dup_windows"] for r in rep_raw) > 0   # knob has work to do
-
-    ded_raw = Q._dup_span_dedup_frame(docs, digest_keys=False).collect()
-    ded_dig = Q._dup_span_dedup_frame(docs, digest_keys=True).collect()
-    assert sorted(map(tuple, ded_raw)) == sorted(map(tuple, ded_dig))
-    assert sum(r["n_removed"] for r in ded_raw) > 0
-
-
 # ---------------------------------------------------------------------------
 # r09 fast-verify internals: the shingle-key packing, the native/numpy
 # intersect kernel, and the fused candidate path must reproduce the
@@ -627,12 +579,12 @@ def test_minhash_verify_join_equals_sidefile(spark, monkeypatch):
     """The adaptive verify's two strategies (key-array join vs per-worker
     side-file load) must be bit-identical on the same corpus: both run the
     same sorted-merge intersect and IEEE jaccard math, and the strategy
-    pick (SPARK_GRAFT_MH_JOIN_VERIFY_RATIO) must never change results."""
+    pick (MH_JOIN_VERIFY_RATIO) must never change results."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-    monkeypatch.setenv("SPARK_GRAFT_MH_JOIN_VERIFY_RATIO", "1e18")  # force join
+    monkeypatch.setattr(DD, "MH_JOIN_VERIFY_RATIO", 10**18)  # force join
     via_join = sorted(map(tuple, DD.minhash_near_dups(docs, threshold_u=400_000).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_MH_JOIN_VERIFY_RATIO", "0")  # force side file
+    monkeypatch.setattr(DD, "MH_JOIN_VERIFY_RATIO", 0)  # force side file
     via_side = sorted(map(tuple, DD.minhash_near_dups(docs, threshold_u=400_000).collect()))
     assert via_join == via_side and len(via_join) > 0
 
@@ -642,7 +594,7 @@ def test_minhash_band_join_no_broadcast_equal(spark, monkeypatch):
     change the candidate set or the result."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     base = sorted(map(tuple, DD.minhash_near_dups(docs, threshold_u=400_000).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_MH_BROADCAST_MAX_DOCS", "0")
+    monkeypatch.setattr(DD, "MH_BROADCAST_MAX_DOCS", 0)
     no_bc = sorted(map(tuple, DD.minhash_near_dups(docs, threshold_u=400_000).collect()))
     assert base == no_bc and len(base) > 0
 

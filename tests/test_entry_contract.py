@@ -42,6 +42,15 @@ def test_entry_smoke(spark):
     assert set(df.columns) >= {"doc_id", "fp", "tok_ws", "quality_u", "lang_pred"}
 
 
+def test_registry_pairs_every_query_with_its_twin():
+    """queries() and oracle_sql() come from one registry: the same names in
+    the same order (the driver windows on that order), and every twin is a
+    non-empty SQL string."""
+    twins = E.oracle_sql()
+    assert list(twins) == list(E.queries())
+    assert all(isinstance(sql, str) and sql.strip() for sql in twins.values())
+
+
 ORACLED = sorted(E.oracle_sql().keys())
 ROWS_ONLY = sorted(set(E.queries().keys()) - set(ORACLED))
 

@@ -134,30 +134,6 @@ def test_date_range_typed_pushes_down(spark):
     assert "GreaterThanOrEqual(ts" in seg and "LessThan(ts" in seg
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Same-bucketed tables join with NO shuffle on either side — the
-    co-location strategy for the engine's repeated canonical_hash joins."""
-    from crawler_news_spark.operators.bucketed import colocated_join, write_bucketed
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    a = docs.select(F.col("doc_id"), F.col("source"))
-    b = docs.select(F.col("doc_id"), F.col("n_chars"))
-    write_bucketed(a, "bkt_a", str(tmp_path / "a"), "doc_id", 8, sort_col="doc_id")
-    write_bucketed(b, "bkt_b", str(tmp_path / "b"), "doc_id", 8, sort_col="doc_id")
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = colocated_join(spark, "bkt_a", "bkt_b", "doc_id")
-        plan = plan_of(j)
-        assert "Exchange" not in plan  # both sides pre-bucketed: no shuffle
-        assert "SortMergeJoin" in plan
-        assert j.count() == docs.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def test_repetition_quality_is_shuffle_free(spark):
     """Both repetition signals are per-row array folds — the plan must be a
     pure projection over the scan: no Exchange, no generator explode."""
